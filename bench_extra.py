@@ -7,13 +7,14 @@ Modes:
                          $SPARK_GRAFT_SF_DIR (default sf1.0 — the
                          driver's measured scale), plans written to
                          plans/r06/<query>_<tag>.txt
-  --crawl                one bench-config crawl with URLMAP_CRAWL_DEBUG=1
-                         phase ticks (per-round breakdown)
+
+Per-round and per-layer crawl attribution comes from the traced
+benchmark run instead:
+  python3 perfbench/run.py --workload crawl-open --seed 1 --trace 1
 
 Usage:
   python bench_extra.py --queries --tag before
   python bench_extra.py --queries --tag after text-langid text-quality
-  URLMAP_CRAWL_DEBUG=1 python bench_extra.py --crawl
 """
 
 from __future__ import annotations
@@ -70,29 +71,10 @@ def run_queries(tag: str, names: list[str], repeats: int = 3) -> None:
     spark.stop()
 
 
-def run_crawl_debug(trials: int = 3) -> None:
-    import bench as B
-    from urlmap_spark.session import get_spark
-
-    spark = get_spark(master=f"local[{CPUS}]", app_name="bench_extra_crawl")
-    spark.sparkContext.setLogLevel("ERROR")
-    cp = B.ensure_corpus(spark)
-    corpus = B.cached_corpus(spark, cp)
-    for t in range(trials):
-        print(f"--- trial {t} ---", flush=True)
-        r = B.run_crawl(spark, cp, corpus=corpus)
-        print(json.dumps(r), flush=True)
-    corpus.unpersist()
-    spark.stop()
-
-
 if __name__ == "__main__":
     argv = sys.argv[1:]
-    if "--crawl" in argv:
-        run_crawl_debug()
-    else:
-        tag = "before"
-        if "--tag" in argv:
-            tag = argv[argv.index("--tag") + 1]
-        names = [a for a in argv if not a.startswith("--") and a != tag]
-        run_queries(tag, names or PICKS)
+    tag = "before"
+    if "--tag" in argv:
+        tag = argv[argv.index("--tag") + 1]
+    names = [a for a in argv if not a.startswith("--") and a != tag]
+    run_queries(tag, names or PICKS)

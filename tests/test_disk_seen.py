@@ -8,9 +8,11 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from urlmap_spark.operators.cuckoo import CuckooConfig
 from urlmap_spark.operators.diskseen import (disk_anti_join,
                                              disk_seen_anti_join,
                                              with_bucket)
+from urlmap_spark.operators.seen import BloomConfig, build_filters
 from urlmap_spark.plans.crawl import CrawlConfig, crawl
 from urlmap_spark.sources import corpus as C
 from urlmap_spark.sources.catalog import RoundCatalog
@@ -41,6 +43,14 @@ def test_disk_anti_join_equals_plain(spark, tmp_path):
     want = {(r["url"], r["k"]) for r in
             cdf.join(seen, "url", "left_anti").collect()}
     assert got == want and len(want) > 0
+    # behind either prefilter kind: the filter config's type picks the
+    # probe, definitely-new rows skip the disk read
+    for fcfg in (BloomConfig(n_buckets=8, m_bits=1 << 14),
+                 CuckooConfig(n_buckets=8, m_bits=1 << 14)):
+        filters = build_filters(seen, fcfg)
+        got = {(r["url"], r["k"]) for r in disk_seen_anti_join(
+            cdf, [p1, p2], 16, filters, fcfg).collect()}
+        assert got == want, type(fcfg).__name__
 
 
 def test_disk_anti_join_empty_dirs_and_extra(spark, tmp_path):

@@ -2,9 +2,11 @@
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
-from urlmap_spark.operators.order import first_wins, with_global_order
+from urlmap_spark.operators.order import (first_wins, first_wins_packed,
+                                          with_global_order)
 
 
 def test_with_global_order_dense_and_correct(spark):
@@ -35,6 +37,20 @@ def test_first_wins_keeps_min_tie_and_payload(spark):
     out = {r["url"]: (r["parent_order"], r["pos"], r["depth"])
            for r in first_wins(df, "url", ["parent_order", "pos"]).collect()}
     assert out == {"u1": (3, 1, 12), "u2": (7, 0, 13)}
+
+
+def test_first_wins_packed_schema_guard(spark):
+    """The packed form serves exactly (url, parent_order, pos, depth):
+    an extra column (which first_wins would carry) or another column
+    order raises on the driver instead of being silently dropped."""
+    rows = [("u1", 5, 2, 10), ("u1", 3, 9, 11), ("u2", 7, 0, 13)]
+    df = spark.createDataFrame(rows, "url string, parent_order long, pos int, depth int")
+    got = {tuple(r) for r in first_wins_packed(df).collect()}
+    assert got == {("u1", 3, 9, 11), ("u2", 7, 0, 13)}
+    for bad in (df.withColumn("extra", F.lit(1)),
+                df.select("url", "pos", "parent_order", "depth")):
+        with pytest.raises(ValueError, match="first_wins_packed needs columns"):
+            first_wins_packed(bad)
 
 
 def test_with_global_order_exact_rank_at_sampling_scale(spark):

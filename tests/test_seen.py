@@ -3,8 +3,10 @@ must never change anti-join results — only route definitely-new rows
 around the exact join."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from urlmap_spark.operators.cuckoo import CuckooConfig
 from urlmap_spark.operators.seen import (
     BloomConfig,
     build_filters,
@@ -29,15 +31,21 @@ def test_no_false_negatives(spark):
     assert maybe.count() == 500
 
 
-def test_prefilter_equivalence_with_plain_anti_join(spark):
+@pytest.mark.parametrize("cfg", [CFG, CuckooConfig(n_buckets=8, m_bits=1 << 14)],
+                         ids=["bloom", "cuckoo"])
+def test_prefilter_equivalence_with_plain_anti_join(spark, cfg):
+    """Both filter kinds through seen.py's one entry point: the config's
+    type picks the build and the probe."""
     seen_urls = [f"https://h{i % 5}.test/p{i}" for i in range(300)]
     cands = [f"https://h{i % 7}.test/p{i}" for i in range(150, 600)]
     seen = _urls(spark, seen_urls)
     cand = _urls(spark, cands)
-    filters = build_filters(seen, CFG)
+    filters = build_filters(seen, cfg)
     plain = {r["url"] for r in cand.join(seen, "url", "left_anti").collect()}
-    bloom = {r["url"] for r in seen_anti_join(cand, seen, filters, CFG).collect()}
-    assert bloom == plain
+    got = {r["url"] for r in seen_anti_join(cand, seen, filters, cfg).collect()}
+    assert got == plain
+    dn, maybe = split_candidates(_urls(spark, seen_urls), filters, cfg)
+    assert dn.count() == 0 and maybe.count() == len(seen_urls)
 
 
 def test_incremental_merge(spark):

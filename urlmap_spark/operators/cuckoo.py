@@ -1,12 +1,14 @@
 """Partitioned cuckoo-filter URL-seen prefilter — the second structure
 named by the north_rule ("partitioned bloom/cuckoo URL-seen").
 
-Same contract and plumbing as the bloom in seen.py: per host-hash
-bucket one fixed-size filter blob persisted as (bucket, filter) rows,
-built/merged with one applyInPandas task per bucket, probed by a
-bucket-cogroup (the blobs never visit the driver), and ALWAYS backed
-by the exact anti-join — a false positive costs an extra exact check,
-a false negative cannot happen by construction:
+Same contract and plumbing as the bloom in seen.py — CuckooConfig has
+BloomConfig's build/split/forget methods, and seen.py's entry points
+dispatch on the config: per host-hash bucket one fixed-size filter blob
+persisted as (bucket, filter) rows, built/merged with one applyInPandas
+task per bucket, probed by a bucket-cogroup (the blobs never visit the
+driver), and ALWAYS backed by the exact anti-join — a false positive
+costs an extra exact check, a false negative cannot happen by
+construction:
 
 - an inserted fingerprint lives in one of its two buckets or in the
   overflow stash (insertion never silently drops — eviction chains
@@ -33,10 +35,19 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .seen import FILTER_SCHEMA, _with_hash_cols
+# build_filters / split_candidates / seen_anti_join are seen.py's
+# entry points, which dispatch on the config's type — re-exported so
+# cuckoo callers keep their import path
+from .seen import (  # noqa: F401
+    FILTER_SCHEMA,
+    _probe_split,
+    _with_hash_cols,
+    build_filters,
+    seen_anti_join,
+    split_candidates,
+)
 
 _FP_MULT = np.uint64(0x5BD1E995)  # odd mixer for the partner-index hash
 
@@ -57,6 +68,83 @@ class CuckooConfig:
         total_slots = max(bucket_slots, m_bits // 16)
         rows = max(1, total_slots // bucket_slots)
         self.n_rows = 1 << (int(rows).bit_length() - 1)  # pow2 floor
+
+    def build(self, urls: DataFrame, existing: DataFrame | None = None) -> DataFrame:
+        """urls(url) [+ existing (bucket, filter)] -> merged (bucket, filter);
+        the merge is _fold."""
+        tagged = _with_hash_cols(urls, self).select("_h1", "_h2", "_bk")
+
+        def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            table = np.zeros((self.n_rows, self.bucket_slots), dtype=np.uint16)
+            stash: list = []
+            fp, r1, _ = _fp_rows(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), self)
+            # vectorized bulk placement (valid because the table is EMPTY
+            # here): each entry's rank within its target row claims a free
+            # slot directly; only rank-overflow entries (a few % at design
+            # occupancy) take the sequential eviction loop. Placement
+            # differs from pure-sequential insertion but membership — the
+            # only observable through the probe — is identical: every
+            # fingerprint lands in one of its two legal rows or the stash.
+            if len(fp):
+                order = np.argsort(r1, kind="stable")
+                rs, fs = r1[order], fp[order]
+                boundaries = np.flatnonzero(np.diff(rs)) + 1
+                run_start = np.concatenate(([0], boundaries))
+                run_len = np.diff(np.concatenate((run_start, [len(rs)])))
+                rank = np.arange(len(rs)) - np.repeat(run_start, run_len)
+                direct = rank < self.bucket_slots
+                table[rs[direct], rank[direct]] = fs[direct]
+                spill_r, spill_f = rs[~direct], fs[~direct]
+                for i in range(len(spill_f)):
+                    _insert_one(table, stash, int(spill_r[i]), int(spill_f[i]),
+                                self, i)
+            return pd.DataFrame({"bucket": [int(key[0])],
+                                 "filter": [_serialize(table, stash)]})
+
+        fresh = tagged.groupBy("_bk").applyInPandas(build, FILTER_SCHEMA)
+        if existing is None:
+            return fresh
+        both = fresh.unionByName(existing)
+
+        def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+            table, stash = _fold(pdf["filter"], self)
+            return pd.DataFrame({"bucket": [int(key[0])],
+                                 "filter": [_serialize(table, stash)]})
+
+        return both.groupBy("bucket").applyInPandas(merge, FILTER_SCHEMA)
+
+    def split(self, candidates: DataFrame, filters: DataFrame,
+              url_col: str = "url") -> tuple[DataFrame, DataFrame]:
+        """candidates -> (definitely_new, maybe_seen); bucket-cogrouped like
+        the bloom probe, fully vectorized per batch."""
+        cand = _with_hash_cols(candidates, self, url_col)
+        schema = T.StructType(cand.schema.fields +
+                              [T.StructField("_maybe", T.BooleanType())])
+        out_cols = [f.name for f in schema.fields]
+
+        def probe(key, cpdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
+            out = cpdf.copy()
+            if len(cpdf) == 0 or len(fpdf) == 0:
+                out["_maybe"] = np.zeros(len(cpdf), dtype=bool)
+                return out[out_cols]
+            fp, r1, r2 = _fp_rows(cpdf["_h1"].to_numpy(), cpdf["_h2"].to_numpy(), self)
+            maybe = np.zeros(len(cpdf), dtype=bool)
+            for b in fpdf["filter"]:  # first blob + any unmerged deltas
+                table, stash = _deserialize(bytes(b))
+                maybe |= (table[r1] == fp[:, None]).any(axis=1) | \
+                         (table[r2] == fp[:, None]).any(axis=1)
+                if len(stash):
+                    maybe |= np.isin(fp, stash)
+            out["_maybe"] = maybe
+            return out[out_cols]
+
+        return _probe_split(cand, filters, probe, schema)
+
+    def forget(self, filters: DataFrame, retired: DataFrame,
+               survivors: DataFrame) -> DataFrame:
+        """Blobs without `retired`: deletes their fingerprints in place
+        (remove_urls), O(retired) — `survivors` is not read."""
+        return remove_urls(filters, retired, self)
 
 
 def _fp_rows(h1: np.ndarray, h2: np.ndarray, cfg: CuckooConfig):
@@ -114,60 +202,20 @@ def _deserialize(blob: bytes):
     return table, stash
 
 
-def build_filters(urls: DataFrame, cfg: CuckooConfig,
-                  existing: DataFrame | None = None) -> DataFrame:
-    """urls(url) [+ existing (bucket, filter)] -> merged (bucket, filter).
-    Merge reinserts every occupied entry of the later blobs into the
-    first — possible (unlike a generic hash set) because an entry's
-    current row IS one of its two legal rows and the partner relation
-    is an involution."""
-    tagged = _with_hash_cols(urls, cfg).select("_h1", "_h2", "_bk")
-
-    def build(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        table = np.zeros((cfg.n_rows, cfg.bucket_slots), dtype=np.uint16)
-        stash: list = []
-        fp, r1, _ = _fp_rows(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), cfg)
-        # vectorized bulk placement (valid because the table is EMPTY
-        # here): each entry's rank within its target row claims a free
-        # slot directly; only rank-overflow entries (a few % at design
-        # occupancy) take the sequential eviction loop. Placement
-        # differs from pure-sequential insertion but membership — the
-        # only observable through the probe — is identical: every
-        # fingerprint lands in one of its two legal rows or the stash.
-        if len(fp):
-            order = np.argsort(r1, kind="stable")
-            rs, fs = r1[order], fp[order]
-            boundaries = np.flatnonzero(np.diff(rs)) + 1
-            run_start = np.concatenate(([0], boundaries))
-            run_len = np.diff(np.concatenate((run_start, [len(rs)])))
-            rank = np.arange(len(rs)) - np.repeat(run_start, run_len)
-            direct = rank < cfg.bucket_slots
-            table[rs[direct], rank[direct]] = fs[direct]
-            spill_r, spill_f = rs[~direct], fs[~direct]
-            for i in range(len(spill_f)):
-                _insert_one(table, stash, int(spill_r[i]), int(spill_f[i]),
-                            cfg, i)
-        return pd.DataFrame({"bucket": [int(key[0])],
-                             "filter": [_serialize(table, stash)]})
-
-    fresh = tagged.groupBy("_bk").applyInPandas(build, FILTER_SCHEMA)
-    if existing is None:
-        return fresh
-    both = fresh.unionByName(existing)
-
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        table, st0 = _deserialize(bytes(pdf["filter"].iloc[0]))
-        stash = list(st0)
-        for b in pdf["filter"].iloc[1:]:
-            t2, s2 = _deserialize(bytes(b))
-            rows, cols = np.nonzero(t2)
-            for r, c in zip(rows, cols):
-                _insert_one(table, stash, int(r), int(t2[r, c]), cfg, int(r))
-            stash.extend(int(x) for x in s2)
-        return pd.DataFrame({"bucket": [int(key[0])],
-                             "filter": [_serialize(table, stash)]})
-
-    return both.groupBy("bucket").applyInPandas(merge, FILTER_SCHEMA)
+def _fold(blobs: pd.Series, cfg: CuckooConfig) -> tuple[np.ndarray, list]:
+    """One bucket's blobs -> (table, stash) of their union: every entry
+    of the later blobs is reinserted into the first — possible (unlike a
+    generic hash set) because an entry's current row IS one of its two
+    legal rows and the partner relation is an involution."""
+    table, st0 = _deserialize(bytes(blobs.iloc[0]))
+    stash = list(st0)
+    for b in blobs.iloc[1:]:
+        t2, s2 = _deserialize(bytes(b))
+        rows, cols = np.nonzero(t2)
+        for r, c in zip(rows, cols):
+            _insert_one(table, stash, int(r), int(t2[r, c]), cfg, int(r))
+        stash.extend(int(x) for x in s2)
+    return table, stash
 
 
 def remove_urls(filters: DataFrame, urls: DataFrame,
@@ -191,14 +239,9 @@ def remove_urls(filters: DataFrame, urls: DataFrame,
     def drop(key, fpdf: pd.DataFrame, updf: pd.DataFrame) -> pd.DataFrame:
         if len(fpdf) == 0:  # removals for a bucket with no filter: no-op
             return pd.DataFrame({"bucket": [], "filter": []})
-        table, st0 = _deserialize(bytes(fpdf["filter"].iloc[0]))
-        stash = list(st0)
-        for b in fpdf["filter"].iloc[1:]:  # fold unmerged deltas first —
-            t2, s2 = _deserialize(bytes(b))  # deleting from only one blob
-            rows, cols = np.nonzero(t2)      # would leave the copy in the
-            for r, c in zip(rows, cols):     # other blob findable
-                _insert_one(table, stash, int(r), int(t2[r, c]), cfg, int(r))
-            stash.extend(int(x) for x in s2)
+        # fold unmerged deltas first — deleting from only one blob
+        # would leave the copy in the other blob findable
+        table, stash = _fold(fpdf["filter"], cfg)
         if len(updf):
             fp, r1, r2 = _fp_rows(updf["_h1"].to_numpy(),
                                   updf["_h2"].to_numpy(), cfg)
@@ -217,49 +260,3 @@ def remove_urls(filters: DataFrame, urls: DataFrame,
 
     return filters.groupBy("bucket").cogroup(
         tagged.groupBy("_bk")).applyInPandas(drop, FILTER_SCHEMA)
-
-
-def split_candidates(candidates: DataFrame, filters: DataFrame,
-                     cfg: CuckooConfig,
-                     url_col: str = "url") -> tuple[DataFrame, DataFrame]:
-    """candidates -> (definitely_new, maybe_seen); bucket-cogrouped like
-    the bloom probe, fully vectorized per batch."""
-    cand = _with_hash_cols(candidates, cfg, url_col)
-    schema = T.StructType(cand.schema.fields +
-                          [T.StructField("_maybe", T.BooleanType())])
-    out_cols = [f.name for f in schema.fields]
-
-    def probe(key, cpdf: pd.DataFrame, fpdf: pd.DataFrame) -> pd.DataFrame:
-        out = cpdf.copy()
-        if len(cpdf) == 0 or len(fpdf) == 0:
-            out["_maybe"] = np.zeros(len(cpdf), dtype=bool)
-            return out[out_cols]
-        fp, r1, r2 = _fp_rows(cpdf["_h1"].to_numpy(), cpdf["_h2"].to_numpy(), cfg)
-        maybe = np.zeros(len(cpdf), dtype=bool)
-        for b in fpdf["filter"]:  # first blob + any unmerged deltas
-            table, stash = _deserialize(bytes(b))
-            maybe |= (table[r1] == fp[:, None]).any(axis=1) | \
-                     (table[r2] == fp[:, None]).any(axis=1)
-            if len(stash):
-                maybe |= np.isin(fp, stash)
-        out["_maybe"] = maybe
-        return out[out_cols]
-
-    probed = cand.groupBy("_bk").cogroup(
-        filters.groupBy("bucket")).applyInPandas(probe, schema)
-    drop = ["_maybe", "_h1", "_h2", "_bk"]
-    return (probed.filter(~F.col("_maybe")).drop(*drop),
-            probed.filter(F.col("_maybe")).drop(*drop))
-
-
-def seen_anti_join(candidates: DataFrame, seen: DataFrame,
-                   filters: DataFrame | None, cfg: CuckooConfig | None = None,
-                   url_col: str = "url") -> DataFrame:
-    """Exact NOT-IN(seen) with the cuckoo prefilter — same contract as
-    seen.seen_anti_join; equality with the plain anti-join pinned by
-    tests."""
-    if filters is None:
-        return candidates.join(seen, url_col, "left_anti")
-    cfg = cfg or CuckooConfig()
-    definitely_new, maybe = split_candidates(candidates, filters, cfg, url_col)
-    return definitely_new.unionByName(maybe.join(seen, url_col, "left_anti"))

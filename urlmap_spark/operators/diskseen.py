@@ -97,17 +97,12 @@ def disk_seen_anti_join(candidates: DataFrame, seen_table_dirs: list[str],
     `extra_seen` — the handful of seen URLs not yet committed to disk
     (the seed list on a fresh crawl; always small, so broadcasting is
     free and keeps the exactness invariant airtight)."""
-    out = candidates
     if filters is not None and filter_cfg is not None:
-        from . import cuckoo as _ck
-        from . import seen as _bl
-        mod = _ck if filter_cfg.__class__.__name__ == "CuckooConfig" else _bl
-        definitely_new, maybe = mod.split_candidates(out, filters, filter_cfg,
-                                                     url_col)
+        definitely_new, maybe = filter_cfg.split(candidates, filters, url_col)
         probed = disk_anti_join(maybe, seen_table_dirs, n_buckets, url_col)
         out = definitely_new.unionByName(probed)
     else:
-        out = disk_anti_join(out, seen_table_dirs, n_buckets, url_col)
+        out = disk_anti_join(candidates, seen_table_dirs, n_buckets, url_col)
     if extra_seen is not None:
         out = out.join(F.broadcast(extra_seen.select(F.col(url_col))),
                        url_col, "left_anti")

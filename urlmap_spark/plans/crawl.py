@@ -29,9 +29,9 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -39,12 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import urlcore
-from ..functions.urlkernel import (
-    same_domain_expr,
-    same_path_prefix_expr,
-    should_skip_expr,
-    status_ok_expr,
-)
+from ..functions.urlkernel import should_skip_expr, status_ok_expr
 from ..operators.extract import canonicalize_links, explode_hrefs, href_category_expr
 from ..operators.order import (
     first_wins,
@@ -54,7 +49,7 @@ from ..operators.order import (
 )
 from ..operators.politeness import schedule_frontier
 from ..operators.robots import robots_gate
-from ..operators.seen import BloomConfig, build_filters, seen_anti_join
+from ..operators.seen import SeenSet
 from ..sources.catalog import RoundCatalog
 
 FRONTIER_SCHEMA = T.StructType([
@@ -65,27 +60,12 @@ FRONTIER_SCHEMA = T.StructType([
 
 RESULT_COLUMNS = ["url", "depth", "order", "status", "ok", "n_links", "round"]
 
-_DEBUG = os.environ.get("URLMAP_CRAWL_DEBUG") == "1"
-
-
-class _Tick:
-    def __init__(self, round_idx: int):
-        self.r = round_idx
-        self.t = time.time()
-
-    def __call__(self, label: str) -> None:
-        if _DEBUG:
-            now = time.time()
-            print(f"  [r{self.r}] {label:24s} {now - self.t:6.2f}s", flush=True)
-            self.t = now
-
 
 @dataclass
 class CrawlConfig:
     max_depth: int = -1                      # -1 = unlimited (reference default)
     same_domain: bool = True                 # hard-coded true in the reference CLI
     same_path_prefix: bool = True            # (cmd/urlmap/main.go:165-166)
-    user_agent: str = "urlmap/1.0"
     max_attempts: int = 1                    # total fetch attempts per URL:
                                              # 5xx is TRANSIENT and re-enqueues
                                              # into the next round until this
@@ -110,8 +90,9 @@ class CrawlConfig:
                                              # per-host maintenance reads prune
                                              # bucket dirs at scan time)
     max_rounds: int = 10_000
-    frontier_partitions: int | None = None
-    extract_partitions: int | None = None    # UDF-stage fan-out (default: cores)
+    frontier_partitions: int | None = None   # round fan-out: frontier ordering
+                                             # and the href-extract stage
+                                             # (default: cores)
     corpus_unique: bool = True               # contract: corpus has ONE row per
                                              # url (a web cannot return two
                                              # responses for one GET). A dirty
@@ -297,7 +278,6 @@ def crawl(
                          "layout")
 
     try:
-        tick0 = _Tick(0)  # setup attribution (debug only)
         catalog = RoundCatalog(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
         # The crawl plan never touches `bytes` unless payload verification
         # is on; select the narrow columns explicitly so even a cache()
@@ -340,30 +320,16 @@ def crawl(
 
         metrics: list[dict] = []
         results_parts: list[DataFrame] = []
-        # df_seeded: this crawl's seed set lives in the catalog's named
-        # `seeds` table (fresh DataFrame-seed run writes it below; a
-        # resume finds it already committed) rather than in the config
-        df_seeded = seeds_df is not None or (
-            catalog is not None and catalog.has_table("seeds"))
+        resumed = resume and catalog is not None and catalog.last_round() is not None
+        round_idx, seed_table = 0, False
 
-        if resume and catalog is not None and catalog.last_round() is not None:
+        if resumed:
             last = catalog.last_round()
             # drop is a no-op on pre-bucketing checkpoints (no _hb column)
             frontier = catalog.read(spark, last, "next_frontier").drop("_hb")
-            seen = catalog.read_union(spark, "seen_delta", upto=last).select("url")
-            if seeds:
-                seen = seen.unionByName(
-                    spark.createDataFrame([(s,) for s in seeds], "url string"))
-            if catalog.has_table("seeds"):
-                # DataFrame-seeded crawl: seeds never enter any
-                # seen_delta, so the persisted seed table re-joins the
-                # seen set exactly as config seeds do on the list path
-                seen = seen.unionByName(
-                    catalog.read_table(spark, "seeds").select("url"))
-            m = catalog.read_metrics(last)
-            order_counter = int(m["order_counter"])
-            round_idx = last + 1
             metrics = [catalog.read_metrics(r) for r in catalog.committed_rounds()]
+            order_counter = int(metrics[-1]["order_counter"])
+            round_idx = last + 1
         elif resume and catalog is not None and catalog.has_table("seeds"):
             # DataFrame-seeded crawl interrupted BEFORE the round-0
             # commit: restart round 0 from the persisted seed table (the
@@ -373,9 +339,6 @@ def crawl(
                         .select("url", "depth", "order")
                         .localCheckpoint(eager=True))
             order_counter = int(catalog.read_table_meta("seeds")["order_counter"])
-            seen = frontier.select("url")
-            round_idx = 0
-            tick0("setup_seeds_table_resume")
         elif seeds_df is not None:
             from ..functions.urlkernel import is_valid_udf, normalize_udf
 
@@ -389,114 +352,23 @@ def crawl(
                 norm.withColumn("depth", F.lit(0)), ["url"], order_col="order",
                 start=0, num_partitions=cfg.frontier_partitions)
             frontier = frontier.select("url", "depth", "order").localCheckpoint(eager=True)
-            if catalog is not None:
-                # persist the normalized round-0 frontier as the named
-                # seed table BEFORE any round runs: from here on every
-                # interrupt point is resumable (VERDICT r4 #2). Bucketed
-                # by the disk-seen key when disk_seen is on, so the
-                # bucket probe reads it like one more seen_delta dir —
-                # at the 10^10-frontier design point the seed set is
-                # itself a table and must never ride a broadcast.
-                sd_meta: dict = {"order_counter": order_counter}
-                sd_pb = None
-                sd_tbl = frontier
-                if cfg.disk_seen:
-                    from ..operators import diskseen as _dsk0
-                    sd_tbl = _dsk0.with_bucket(frontier, cfg.disk_seen_buckets)
-                    sd_pb = ["_ub"]
-                    sd_meta["disk_seen_cfg"] = [cfg.disk_seen_buckets]
-                catalog.commit_table("seeds", sd_tbl, partition_by=sd_pb,
-                                     meta=sd_meta)
-            seen = frontier.select("url")
-            round_idx = 0
-            tick0("setup_seeds_df")
+            # the seen set persists the normalized round-0 frontier as
+            # the catalog's named seed table BEFORE any round runs: from
+            # here on every interrupt point is resumable (VERDICT r4 #2)
+            seed_table = catalog is not None
         else:
             frontier = spark.createDataFrame(
                 [(s, 0, i) for i, s in enumerate(seeds)], FRONTIER_SCHEMA)
             if len(seeds) > 64:
                 frontier = frontier.repartition(
                     cfg.frontier_partitions or spark.sparkContext.defaultParallelism)
-            seen = frontier.select("url")
             order_counter = len(seeds)
-            round_idx = 0
 
+        seen = SeenSet(spark, cfg, catalog, seeds, order_counter,
+                       first=None if resumed else frontier, seed_table=seed_table)
         if has_attempt and "attempt" not in frontier.columns:
             frontier = frontier.withColumn("attempt", F.lit(1))
 
-        # seen is kept as a list of materialized deltas (union on demand):
-        # no per-round checkpoint of the whole set, compacted past a threshold
-        seen_parts: list[DataFrame] = [seen.localCheckpoint(eager=True)]
-        tick0("setup_seen_ckpt")
-        seeds_seen_small: DataFrame | None = None
-        seeds_table_dirs: list[str] = []
-        if cfg.disk_seen:
-            # the only seen URLs that never reach the catalog's seen_delta
-            # tables are the seeds themselves (each round's new URLs are
-            # committed before the next anti-join runs) — list seeds are
-            # kept as a tiny broadcastable frame; a DataFrame seed TABLE
-            # (10^10-frontier path: never broadcastable) is persisted in
-            # the same _ub bucket layout as seen_delta, so the bucket
-            # probe reads it like one more delta dir
-            if seeds:
-                seeds_seen_small = spark.createDataFrame(
-                    [(s,) for s in seeds], "url string").localCheckpoint(eager=True)
-            if df_seeded and catalog is not None and catalog.has_table("seeds"):
-                got_sd = catalog.read_table_meta("seeds").get("disk_seen_cfg")
-                if got_sd != [cfg.disk_seen_buckets]:
-                    raise ValueError(
-                        f"disk_seen resume: seeds table was written with "
-                        f"disk_seen_cfg={got_sd!r}, this run wants "
-                        f"{[cfg.disk_seen_buckets]!r} — bucket layouts are "
-                        "incompatible; re-crawl or match disk_seen_buckets")
-                seeds_table_dirs = [catalog.table_dir("seeds")]
-            if resume and catalog is not None and catalog.last_round() is not None:
-                # a checkpoint written without disk_seen has FLAT seen_delta
-                # dirs: the bucket probe would read nothing from them and
-                # silently re-enqueue seen URLs — refuse instead
-                want_dsk = [cfg.disk_seen_buckets]
-                got = catalog.read_metrics(catalog.last_round()).get("disk_seen_cfg")
-                if got != want_dsk:
-                    raise ValueError(
-                        f"disk_seen resume: checkpoint was written with "
-                        f"disk_seen_cfg={got!r}, this run wants {want_dsk!r} "
-                        "— bucket layouts are incompatible; re-crawl or "
-                        "match disk_seen_buckets")
-        if cfg.seen_filter == "cuckoo":
-            from ..operators import cuckoo as _fmod
-            _mk_filter_cfg = _fmod.CuckooConfig
-        elif cfg.seen_filter == "bloom":
-            from ..operators import seen as _fmod
-            _mk_filter_cfg = BloomConfig
-        else:
-            raise ValueError(f"unknown seen_filter: {cfg.seen_filter!r}")
-        bloom_cfg = _mk_filter_cfg(cfg.bloom_buckets, cfg.bloom_bits) if cfg.bloom_seen else None
-        filters: DataFrame | None = None
-        if cfg.bloom_seen:
-            persisted = None
-            if resume and catalog is not None and catalog.last_round() is not None:
-                # the committed seen_filters cover exactly the committed
-                # seen set (folded pre-commit), so a matching-config
-                # resume loads the blobs instead of rebuilding from the
-                # full seen history — at the 10^10-URL design point the
-                # rebuild is a full-table scan, the load is ~MBs/bucket
-                last = catalog.last_round()
-                want = [cfg.seen_filter, cfg.bloom_buckets, cfg.bloom_bits]
-                if catalog.read_metrics(last).get("seen_filter_cfg") == want:
-                    try:
-                        persisted = catalog.read(spark, last, "seen_filters")
-                        if seeds:
-                            # extra resume seeds joined `seen` above, so
-                            # they must enter the blobs too — a filter
-                            # miss bypasses the exact anti-join entirely
-                            persisted = _fmod.build_filters(
-                                spark.createDataFrame([(s,) for s in seeds],
-                                                      "url string"),
-                                bloom_cfg, existing=persisted)
-                        persisted = persisted.localCheckpoint(eager=True)
-                    except Exception:  # noqa: BLE001 — older checkpoint layout
-                        persisted = None
-            filters = persisted if persisted is not None else \
-                _fmod.build_filters(seen_parts[0], bloom_cfg).localCheckpoint(eager=True)
         total_skipped = 0
         politeness = (cfg.host_quota is not None or cfg.default_quota is not None
                       or cfg.global_cap is not None)
@@ -511,11 +383,9 @@ def crawl(
         n_frontier = (frontier.count()
                       if (resume and catalog is not None) or seeds_df is not None
                       else len(seeds))
-        tick0("setup_rest")
 
         while round_idx < cfg.max_rounds and n_frontier > 0:
             t0 = time.time()
-            tick = _Tick(round_idx)
 
             # --- dequeue-time depth gate (reference: crawler.go:207-211).
             # Pure BFS keeps one depth per round (= round_idx), so the gate is
@@ -678,7 +548,6 @@ def crawl(
                 # by now; without this, cached frontiers accrete in executor
                 # storage for the life of a depth-limited politeness crawl
                 persisted.unpersist()
-            tick("fetch_ckpt")
 
             # --- outlink extraction on OK pages only (crawler.go:644).
             # The exploded hrefs are materialized once per round: it (a) runs
@@ -696,7 +565,7 @@ def crawl(
             # repartition remains only for the narrow case where the
             # fetch materialization came out under-partitioned (tiny
             # corpora whose join AQE-coalesced below the core count).
-            n_extract = cfg.extract_partitions or spark.sparkContext.defaultParallelism
+            n_extract = cfg.frontier_partitions or spark.sparkContext.defaultParallelism
             exploded = (
                 explode_hrefs(
                     final.filter(F.col("ok")).select("url", "depth", "order", "caption")
@@ -736,7 +605,6 @@ def crawl(
             ).localCheckpoint(eager=True)
             n_slow = int(eobs.get["n_slow"] or 0)
             max_pos = int(eobs.get["max_pos"] or 0)
-            tick("explode_ckpt")
 
             # --- scope vs the normalized seed(s) (crawler.go:233-249) is
             # applied INSIDE canonicalize_links, per branch, with the seed
@@ -764,9 +632,6 @@ def crawl(
             )
 
             # --- first-wins intra-round dedup + anti-join the seen set --------
-            seen = seen_parts[0]
-            for p in seen_parts[1:]:
-                seen = seen.unionByName(p)
             cand = links.select(
                 F.col("outlink").alias("url"), "parent_order", "pos", "depth")
             # packed-long first-wins when this round's tie-key maxima fit
@@ -780,60 +645,7 @@ def crawl(
             else:
                 def _fw(d):
                     return first_wins(d, "url", ["parent_order", "pos"])
-            if 0 < order_counter <= cfg.broadcast_seen_max_urls:
-                # |seen| == order_counter (every enqueued URL, exactly), so
-                # this is an exact driver-side broadcast decision, not an
-                # estimate. Broadcasting seen lets the anti-join run map-
-                # side BEFORE the dedup shuffle: in a converging crawl most
-                # candidate links point at seen URLs and never reach an
-                # exchange. Catalyst can't make this call itself — seen is
-                # a union of checkpointed RDDs with no size stats.
-                cand = cand.join(F.broadcast(seen), "url", "left_anti")
-                new = _fw(cand)
-            elif cfg.disk_seen:
-                # 10^10 exact path: seen stays in its persisted _ub bucket
-                # layout and is read task-side — the only exchange ships
-                # the candidates + a 4-byte bucket key (diskseen.py)
-                from ..operators import diskseen as _dsk
-                deduped = _fw(cand)
-                new = _dsk.disk_seen_anti_join(
-                    deduped,
-                    seeds_table_dirs + catalog.table_paths("seen_delta"),
-                    cfg.disk_seen_buckets, filters, bloom_cfg,
-                    extra_seen=seeds_seen_small,
-                )
-            else:
-                deduped = _fw(cand)
-                if filters is None:
-                    # shuffled-HASH anti, not sort-merge: both sides are
-                    # exchanged either way, but SHJ skips both sorts and
-                    # builds each partition's seen hash table in parallel
-                    # (url keys are unique, so build partitions are
-                    # uniform — no skew risk; r6 ABAB on the bench crawl:
-                    # late-round walls 6.1-7.1s -> 4.2-4.3s)
-                    new = deduped.join(seen.hint("shuffle_hash"), "url",
-                                       "left_anti")
-                else:
-                    new = _fmod.seen_anti_join(deduped, seen, filters, bloom_cfg)
-
-            if _DEBUG and order_counter > 0:
-                # sub-phase attribution of the extract_dedup span (debug
-                # only — each noop re-runs the chain prefix, so the deltas
-                # are the incremental costs of canonicalize / anti-join /
-                # first-wins; the real path below is untouched). On the
-                # broadcast path `cand` already carries the anti-join; on
-                # the shuffled path the order is dedup-then-anti.
-                links.write.format("noop").mode("overwrite").save()
-                tick("dbg_canonicalize")
-                if order_counter <= cfg.broadcast_seen_max_urls:
-                    cand.write.format("noop").mode("overwrite").save()
-                    tick("dbg_plus_anti")
-                elif not cfg.disk_seen:
-                    _fw(cand) \
-                        .write.format("noop").mode("overwrite").save()
-                    tick("dbg_plus_dedup1")
-                new.write.format("noop").mode("overwrite").save()
-                tick("dbg_plus_rest")
+            new = seen.gate(cand, _fw)
 
             # --- assign global crawl order (FIFO enqueue order). ONE fused
             # materialization: with_global_order eagerly checkpoints the
@@ -848,8 +660,6 @@ def crawl(
                 new, ["parent_order", "pos"], order_col="order", start=order_counter,
                 num_partitions=cfg.frontier_partitions,
             )
-            tick("extract_dedup_ckpt")
-            tick("order_counts")
             n_new = order_counter - prev_counter
             new_frontier = new.select("url", "depth", "order")
             if has_attempt:
@@ -869,7 +679,6 @@ def crawl(
                 # pass, so an eager checkpoint here is a whole Spark job
                 # of pure fixed cost
                 next_frontier = new_frontier
-            tick("frontier_ckpt")
 
             results_r = final.select(
                 "url", "depth", "order", "status", "ok",
@@ -890,14 +699,7 @@ def crawl(
                 # ticker needs them for queue_size and must NOT count
                 # them processed (ADVICE r3)
                 **({"deferred": n_deferred} if politeness else {}),
-                # lets resume/maintenance validate the persisted
-                # seen_filters blobs before trusting them
-                **({"seen_filter_cfg": [cfg.seen_filter, cfg.bloom_buckets,
-                                        cfg.bloom_bits]} if cfg.bloom_seen else {}),
-                # lets a disk_seen resume validate the persisted bucket
-                # layout before trusting it
-                **({"disk_seen_cfg": [cfg.disk_seen_buckets]}
-                   if cfg.disk_seen else {}),
+                **seen.tags,
             }
             m.update({
                 "urls_per_sec": round(int(om["processed"] or 0) / max(round_wall, 1e-9), 1),
@@ -910,16 +712,7 @@ def crawl(
             })
             total_skipped += skipped_depth + int(blocked_robots)
 
-            if cfg.bloom_seen:
-                # fold the round's delta BEFORE the commit so the
-                # persisted seen_filters cover exactly the committed
-                # seen set — a resume can then load the blobs directly
-                # instead of rebuilding from 10^10 seen rows (a stale
-                # pre-delta blob would false-negative this round's URLs
-                # and re-enqueue duplicates)
-                filters = _fmod.build_filters(new.select("url"), bloom_cfg,
-                                              existing=filters).localCheckpoint(eager=True)
-
+            seen_tables, pb = seen.add(new, n_new)
             if catalog is not None:
                 # per-PARTITION lineage (north_rule): bucket is the same
                 # host-hash key the persisted frontier is partitioned by,
@@ -936,14 +729,8 @@ def crawl(
                 # empty — a 0-row partitionBy write leaves no data files
                 # and the re-read below could not infer a schema
                 bucket_nf = (n_new + n_deferred + n_retry) > 0
-                sd = new.select("url")
-                pb: dict[str, list[str]] = {}
                 if bucket_nf:
                     pb["next_frontier"] = ["_hb"]
-                if cfg.disk_seen and n_new > 0:  # 0-row partitionBy writes no files
-                    from ..operators import diskseen as _dsk
-                    sd = _dsk.with_bucket(sd, cfg.disk_seen_buckets)
-                    pb["seen_delta"] = ["_ub"]
                 tables = {
                     "results": results_r,
                     "next_frontier": next_frontier.withColumn(
@@ -951,52 +738,28 @@ def crawl(
                         F.pmod(F.xxhash64(F.expr("try_parse_url(url, 'HOST')")),
                                F.lit(cfg.frontier_host_buckets)).cast("int"))
                     if bucket_nf else next_frontier,
-                    "seen_delta": sd,
+                    **seen_tables,
                     "lineage": lineage,
                 }
-                if cfg.bloom_seen:
-                    tables["seen_filters"] = filters
                 catalog.commit_round(round_idx, tables, m,
                                      partition_by=pb or None)
                 # re-read from storage: snapshot-isolated resume point
                 frontier = catalog.read(spark, round_idx, "next_frontier").drop("_hb")
-                seen_parts.append(
-                    catalog.read(spark, round_idx, "seen_delta").select("url"))
-                if cfg.compact_seen_every > 0 and \
-                        (round_idx + 1) % cfg.compact_seen_every == 0:
-                    catalog.compact(spark, "seen_delta", vacuum=True)
-                    # same cadence for the append-only results/lineage
-                    # tables (VERDICT r4 #5): a 10^3-round crawl would
-                    # otherwise accrete per-round dirs whose open/footer
-                    # cost dominates the final read_union — the classic
-                    # small-files problem, bounded here to one snapshot
-                    # + <cadence> deltas per table. Resume never reads
-                    # these tables (frontier/seen/metrics only), so the
-                    # fold cannot perturb resume state.
+                if seen.committed(round_idx):
+                    # the seen set folded its deltas: same cadence for the
+                    # append-only results/lineage tables (VERDICT r4 #5):
+                    # a 10^3-round crawl would otherwise accrete per-round
+                    # dirs whose open/footer cost dominates the final
+                    # read_union — the classic small-files problem,
+                    # bounded here to one snapshot + <cadence> deltas per
+                    # table. Resume never reads these tables
+                    # (frontier/seen/metrics only), so the fold cannot
+                    # perturb resume state.
                     catalog.compact(spark, "results", vacuum=True)
                     catalog.compact(spark, "lineage", vacuum=True)
-                    # the old seen_parts entries lazily reference the
-                    # just-vacuumed delta dirs — rebuild from the
-                    # snapshot (+ seeds, which never enter any delta)
-                    seen_parts = [catalog.read_union(spark, "seen_delta")
-                                  .select("url")]
-                    if seeds:
-                        seen_parts.append(spark.createDataFrame(
-                            [(s,) for s in seeds], "url string"))
-                    if catalog.has_table("seeds"):
-                        seen_parts.append(
-                            catalog.read_table(spark, "seeds").select("url"))
-                    tick("seen_compact")
             else:
                 results_parts.append(results_r)
-                seen_parts.append(new.select("url"))
                 frontier = next_frontier
-
-            if len(seen_parts) > 64:  # bound the union width on deep crawls
-                compacted = seen_parts[0]
-                for p in seen_parts[1:]:
-                    compacted = compacted.unionByName(p)
-                seen_parts = [compacted.localCheckpoint(eager=True)]
 
             n_frontier = n_new + n_deferred + n_retry
             metrics.append(m)
@@ -1007,33 +770,18 @@ def crawl(
                     pass
             round_idx += 1
 
-        if catalog is not None:
-            if catalog.committed_rounds():
-                results = catalog.read_union(spark, "results")
-                seen_df = catalog.read_union(spark, "seen_delta").select("url")
-            else:
-                # interrupted before any round committed (e.g. a
-                # max_rounds=0 probe of a DataFrame-seeded setup): the
-                # seed table below is the only state
-                results = spark.createDataFrame([], T.StructType(
-                    [T.StructField(c, T.StringType()) for c in RESULT_COLUMNS]))
-                seen_df = spark.createDataFrame([], "url string")
-            if seeds:
-                seen_df = seen_df.unionByName(
-                    spark.createDataFrame([(s,) for s in seeds], "url string"))
-            if catalog.has_table("seeds"):
-                seen_df = seen_df.unionByName(
-                    catalog.read_table(spark, "seeds").select("url"))
+        if catalog is not None and catalog.committed_rounds():
+            results = catalog.read_union(spark, "results")
+        elif results_parts:
+            results = reduce(DataFrame.unionByName, results_parts)
         else:
-            results = results_parts[0] if results_parts else spark.createDataFrame([], T.StructType(
+            # nothing ran or nothing committed (e.g. a max_rounds=0
+            # probe of a DataFrame-seeded setup)
+            results = spark.createDataFrame([], T.StructType(
                 [T.StructField(c, T.StringType()) for c in RESULT_COLUMNS]))
-            for p in results_parts[1:]:
-                results = results.unionByName(p)
-            seen_df = seen_parts[0]
-            for p in seen_parts[1:]:
-                seen_df = seen_df.unionByName(p)
 
-        return CrawlRun(results=results, metrics=metrics, rounds=round_idx, seen=seen_df)
+        return CrawlRun(results=results, metrics=metrics, rounds=round_idx,
+                        seen=seen.frame())
 
     finally:
         if old_excluded:

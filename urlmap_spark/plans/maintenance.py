@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.order import with_global_order
+from ..operators.seen import filter_config
 from ..sources.catalog import RoundCatalog
 
 
@@ -58,22 +59,16 @@ def _zero_metrics(round_idx: int, order_counter: int, **extra) -> dict:
 
 
 def _load_filter_state(spark, cat: RoundCatalog, last: int):
-    """(kind, cfg, filters_df) from the last committed round, or
-    (None, None, None) when blobs were not persisted there."""
-    m = cat.read_metrics(last)
-    fc = m.get("seen_filter_cfg")
+    """(filter config, filters_df) from the last committed round, or
+    (None, None) when blobs were not persisted there."""
+    fc = cat.read_metrics(last).get("seen_filter_cfg")
     if not fc:
-        return None, None, None
-    kind, n_buckets, m_bits = fc[0], int(fc[1]), int(fc[2])
+        return None, None
     try:
         filters = cat.read(spark, last, "seen_filters")
     except Exception:  # noqa: BLE001 — blobs absent in this layout
-        return None, None, None
-    if kind == "cuckoo":
-        from ..operators.cuckoo import CuckooConfig
-        return kind, CuckooConfig(n_buckets, m_bits), filters
-    from ..operators.seen import BloomConfig
-    return kind, BloomConfig(n_buckets, m_bits), filters
+        return None, None
+    return filter_config(*fc), filters
 
 
 def requeue_urls(spark: SparkSession, checkpoint_dir: str, urls,
@@ -113,7 +108,7 @@ def requeue_urls(spark: SparkSession, checkpoint_dir: str, urls,
     n_requeued = new_counter - order_counter
 
     tables = {"next_frontier": merged}
-    kind, fcfg, filters = _load_filter_state(spark, cat, last)
+    _, filters = _load_filter_state(spark, cat, last)
     if filters is not None:
         tables["seen_filters"] = filters  # carry forward unchanged
     mm = _zero_metrics(last + 1, new_counter, maintenance="requeue",
@@ -156,7 +151,7 @@ def retire_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
         .localCheckpoint(eager=True)
     n_retired = retire.count()
 
-    kind, fcfg, filters = _load_filter_state(spark, cat, last)
+    fcfg, filters = _load_filter_state(spark, cat, last)
 
     # snapshot = (all committed seen) minus retired; vacuums the deltas
     # it covers so resume reads one snapshot + post-maintenance deltas
@@ -164,13 +159,8 @@ def retire_urls(spark: SparkSession, checkpoint_dir: str, urls) -> dict:
 
     tables = {"next_frontier": frontier}
     if filters is not None:
-        if kind == "cuckoo":
-            from ..operators.cuckoo import remove_urls
-            tables["seen_filters"] = remove_urls(filters, retire, fcfg)
-        else:
-            from ..operators.seen import build_filters
-            tables["seen_filters"] = build_filters(
-                cat.read_union(spark, "seen_delta").select("url"), fcfg)
+        tables["seen_filters"] = fcfg.forget(
+            filters, retire, cat.read_union(spark, "seen_delta").select("url"))
     mm = _zero_metrics(last + 1, int(m["order_counter"]),
                        maintenance="retire", retired=n_retired,
                        skipped_pending=n_pending,
